@@ -421,8 +421,8 @@ def main() -> None:
         # times a frozen-literal-weights score-only SQL), closing the
         # r14 accounting asymmetry.  The scale-convergence tables
         # (BASELINE.md sf1x/sf3x) rebuild and re-train per run on BOTH
-        # engines; tools/r14_classifier_decades.py is the classifier's
-        # train-inclusive decade sweep (BASELINE.md §r14).
+        # engines; the classifier's train-inclusive decade sweep is in
+        # BASELINE.md §r14.
         "note": "ANN rows price search against prebuilt models (DuckDB"
         " denominator re-trains; disclosed); classifier row is"
         " symmetric score-only on both engines since r15; see"

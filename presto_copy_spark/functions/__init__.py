@@ -48,28 +48,31 @@ def register_all(spark: SparkSession) -> None:
     spark.conf.set(marker, "true")
 
 
+def _pdudf(ret, fn):
+    """Arrow-batched pandas UDF applying the scalar ``fn`` row-wise,
+    NULL if any argument is NULL (Presto's RETURNS NULL ON NULL INPUT)."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf(ret)
+    def _udf(*cols):
+        import pandas as pd
+
+        return pd.Series(
+            [
+                None if any(v is None for v in vals) else fn(*vals)
+                for vals in zip(*cols)
+            ]
+        )
+
+    return _udf
+
+
 def _register_color_py(spark: SparkSession) -> None:
     """ANSI display family as SQL names (ColorFunctions.java color /
     render / bar): non-literal args route here (literal calls are
     constant-folded by the dialect via the same Python ports).
     Arrow-batched pandas UDFs — display functions, never a hot path."""
-    from pyspark.sql import functions as F
-
     from .presto import _py_color, py_bar, py_render
-
-    def _pdudf(ret, fn):
-        @F.pandas_udf(ret)
-        def _udf(*cols):
-            import pandas as pd
-
-            return pd.Series(
-                [
-                    None if any(v is None for v in vals) else fn(*vals)
-                    for vals in zip(*cols)
-                ]
-            )
-
-        return _udf
 
     spark.udf.register("color", _pdudf("bigint", lambda s: _py_color(str(s))))
     spark.udf.register(
@@ -89,22 +92,6 @@ def _register_binary_py(spark: SparkSession) -> None:
     (BinaryFunctions.java to/fromIEEE754, hmacSha*/hmacMd5;
     IpPrefixFunctions.java isPrivateIp): Arrow-batched pandas UDFs over
     stdlib struct/hmac/ipaddress — off the hot path by design."""
-    from pyspark.sql import functions as F
-
-    def _pdudf(ret, fn):
-        @F.pandas_udf(ret)
-        def _udf(*cols):
-            import pandas as pd
-
-            return pd.Series(
-                [
-                    None if any(v is None for v in vals) else fn(*vals)
-                    for vals in zip(*cols)
-                ]
-            )
-
-        return _udf
-
     import hmac as _hmac
     import ipaddress as _ip
     import struct as _struct

@@ -68,19 +68,8 @@ def _python_stage_parallelism(spark: SparkSession) -> int:
     round-trips cost more than the ~0.3 s of actual Python compute
     (measured 0.64 s wall at 32 vs 0.35 s single-task).  A modest
     fan-out amortizes worker startup while still parallelizing the
-    codec work; env-overridable for clusters where the Python work per
-    row is heavier (then raise toward the core count).
+    codec work.
     """
-    import os
-
-    try:
-        n = int(os.environ.get("SPARK_GRAFT_PY_STAGE_PARTITIONS", "0") or 0)
-    except ValueError:
-        # non-numeric override: fall back to the computed default rather
-        # than failing every multimodal query at build time (ADVICE r15)
-        n = 0
-    if n > 0:
-        return n
     return max(2, spark.sparkContext.defaultParallelism // 4)
 
 

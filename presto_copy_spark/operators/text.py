@@ -149,28 +149,6 @@ def minhash_cols(shingle: Column, n_hashes: int = 16) -> list[Column]:
     ]
 
 
-def minhash_sig_over_array(arr: Column, n_hashes: int = 16) -> list[Column]:
-    """MinHash signature computed per-row over a shingle ARRAY column:
-    h_i = array_min(transform(arr, s -> mix_i(hash60(s)))).
-
-    This is the zero-shuffle form of ``min(minhash_cols)`` over the
-    exploded inverted index — identical values (same hash, same mixers,
-    min over the same distinct set), but a pure projection: at 100 TB
-    the signature stage streams with the scan instead of exploding
-    ~100x rows and shuffling them on doc_id.  Empty arrays yield NULL
-    mins — callers must filter size(arr) > 0 to match the
-    inverted-index form, which has no rows for shingle-less docs.
-    """
-    def _mixer(a: int, b: int):
-        # PySpark derives lambda arity from the signature: exactly one arg
-        return lambda s: ((hash60(s) % MINHASH_M) * a + b) % MINHASH_M
-
-    return [
-        F.array_min(F.transform(arr, _mixer(a, b))).alias(f"h{i}")
-        for i, (a, b) in enumerate(_mix_constants(n_hashes))
-    ]
-
-
 def sql_minhash_min_terms(n_hashes: int = 16, shingle: str = "shingle") -> str:
     base = f"({sql_hash60(shingle)} % {MINHASH_M})"
     return ",\n         ".join(

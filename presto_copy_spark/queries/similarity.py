@@ -1307,70 +1307,41 @@ def semantic_dedup(
         qdot(F.col("embedding"), F.col("embedding")).alias("nq"),
     )
     # window-carried size guard: one exchange on cluster that the
-    # self-join reuses (same pattern/rationale as sim_ann_lsh_neardup).
-    # The guarded assignment is the SemDeDup artifact (vec_id, cluster,
-    # embedding) — materialize it once: the self-join consumes it TWICE
-    # and Spark does not exchange-reuse the diamond, so without this
-    # the broadcast-argmin corpus pass and the window run once per side.
+    # per-cluster pair kernel reuses (same pattern/rationale as
+    # sim_ann_lsh_neardup)
     w = Window.partitionBy("cluster")
     base = (
         base0.withColumn("cn", F.count(F.lit(1)).over(w))
         .filter(F.col("cn") <= cap)
         .drop("cn")
-        .localCheckpoint(eager=False)
     )
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SEM_KERNEL", "numpy") == "numpy":
-        return _sem_pair_reduce_numpy(base)
-    a, b = base.alias("a"), base.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.cluster") == F.col("b.cluster"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("keeper"),
-        F.col("b.vec_id").alias("dup"),
-        # NOTE: an unrolled 64-term straight-line dot was tried here
-        # (round 5) on the theory that HOFs evaluate interpreted — it
-        # measured 2x SLOWER than zip_with/aggregate (64 element_at
-        # calls each re-resolve the array vs the HOF's single array
-        # traversal), so the HOF form stays.
-        cosine_from_q(
-            qdot(F.col("a.embedding"), F.col("b.embedding")),
-            F.col("a.nq"),
-            F.col("b.nq"),
-        ).alias("cosine"),
-    )
-    return (
-        pairs.filter(F.col("cosine") >= SEM_T)
-        .groupBy(F.col("dup").alias("dropped_vec_id"))
-        .agg(
-            F.min("keeper").cast("long").alias("kept_vec_id"),
-            F.max("cosine").alias("max_cosine"),
-        )
-    )
+    return _sem_pair_reduce_numpy(base)
 
 
 def _sem_pair_reduce_numpy(base: DataFrame) -> DataFrame:
-    """Round-16 pair-scan kernel (VERDICT r15 ask #1, guide §4.2): the
-    within-cluster pair join + quantized-cosine + per-dup reduction as
-    ONE vectorized Arrow/numpy kernel per cluster group.
+    """SemDeDup's pair scan: the within-cluster pair rule, quantized
+    cosine and per-dup reduction of the oracle's self-join (pairs
+    ``a.cluster = b.cluster AND a.vec_id < b.vec_id``, then
+    ``GROUP BY dup``) as ONE vectorized Arrow/numpy kernel per cluster
+    group.
 
-    The JVM form was the suite's largest compute block (~3.1 s task CPU
-    at sf0.1): a shuffled self-join on cluster whose per-pair cosine is
-    an INTERPRETED zip_with+aggregate over two 64-float arrays (Spark's
-    higher-order functions don't whole-stage-codegen), followed by a
-    second exchange for the per-dup groupBy.  Every decision is
-    cluster-local — pairs exist only within a cluster, and a dup's
-    group (its b-side rows) lives entirely in its own cluster — so the
-    whole thing collapses to groupBy(cluster).applyInPandas: ONE
-    exchange total (was 3: two join inputs + the groupBy), rows cross
-    to Python once as Arrow batches (|corpus| x 64 floats, a few MB),
-    and the O(n^2 * dim) pair math runs as C-loop numpy instead of
-    interpreted expression trees.
+    Every decision is cluster-local — pairs exist only within a
+    cluster, and a dup's group (its keeper-side rows) lives entirely in
+    its own cluster — so the whole thing is
+    groupBy(cluster).applyInPandas: one exchange on cluster (shared
+    with the size-guard window), rows cross to Python once as Arrow
+    batches (|corpus| x 64 floats, a few MB), and the O(n^2 * dim) pair
+    math runs as C-loop numpy.  A JVM self-join would evaluate each
+    pair's cosine as an INTERPRETED zip_with+aggregate (higher-order
+    functions don't whole-stage-codegen) behind three exchanges: ~3.1 s
+    task CPU at sf0.1.
 
-    Bit-exactness with the JVM form / DuckDB oracle (same argument as
+    Pairs qualify on ``ids[i] < ids[j]``, not on sorted position, so a
+    vec_id repeated within a cluster never pairs with itself, and its
+    copies reduce to ONE output row, exactly as the oracle's
+    ``GROUP BY dup`` does.
+
+    Bit-exactness with the DuckDB oracle (same argument as
     operators/similarity.qdot): float32 embeddings widen to float64
     exactly; x*y is exact in double (24-bit mantissas); (x*y)*1e9
     rounds once, identically, in the JVM and in numpy; floor and the
@@ -1401,7 +1372,7 @@ def _sem_pair_reduce_numpy(base: DataFrame) -> DataFrame:
         if n < 2:
             return pd.DataFrame(empty)
         ids_raw = pdf["vec_id"].to_numpy(np.int64)
-        order = np.argsort(ids_raw, kind="stable")  # vec_id unique per corpus
+        order = np.argsort(ids_raw, kind="stable")
         ids = ids_raw[order]
         emb = pdf["embedding"].to_numpy()[order]
         e_mat = np.stack([np.asarray(e, dtype=np.float64) for e in emb])
@@ -1418,18 +1389,21 @@ def _sem_pair_reduce_numpy(base: DataFrame) -> DataFrame:
                 d = np.floor(prods * s).astype(np.int64).sum(axis=2)
                 cos[i0:i1] = (d / s) / (den[i0:i1, None] * den[None, :])
             qual = (cos >= _t) | np.isnan(cos)  # Spark: NaN >= x is true
-        qual[np.tril_indices(n)] = False  # keep i < j only (ids ascending)
-        js = np.nonzero(qual.any(axis=0))[0]
+        qual &= ids[:, None] < ids[None, :]  # pair rule: keeper id < dup id
+        # one column per distinct dup id (equal ids are adjacent once sorted)
+        starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+        qual_u = np.logical_or.reduceat(qual, starts, axis=1)
+        cos_u = np.maximum.reduceat(np.where(qual, cos, -np.inf), starts, axis=1)
+        js = np.nonzero(qual_u.any(axis=0))[0]
         if js.size == 0:
             return pd.DataFrame(empty)
-        sub = qual[:, js]
+        sub = qual_u[:, js]
         first_i = sub.argmax(axis=0)  # min qualifying row = min keeper vec_id
-        max_cos = np.where(sub, cos[:, js], -np.inf).max(axis=0)
         return pd.DataFrame(
             {
-                "dropped_vec_id": ids[js],
+                "dropped_vec_id": ids[starts[js]],
                 "kept_vec_id": ids[first_i],
-                "max_cosine": max_cos,
+                "max_cosine": cos_u[:, js].max(axis=0),
             }
         )
 

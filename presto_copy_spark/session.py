@@ -10,7 +10,8 @@ engine's performance posture is declared:
   ``DetermineJoinDistributionType`` / ``RuntimeReorderJoinSides`` rules.
   On local[...] masters AQE defaults off (its per-stage job
   materialization + re-optimization dominates sub-second runs; see the
-  inline note) — SPARK_GRAFT_AQE=1 restores it.
+  inline note) — ``extra_conf`` or a runtime ``spark.conf.set``
+  restores it.
 - CBO + join reorder on — analogue of ``ReorderJoins`` /
   ``EliminateCrossJoins`` (needs ANALYZE stats to bite).
 - Runtime bloom filters + dynamic partition pruning — analogue of
@@ -53,6 +54,7 @@ def get_spark(
     cpus = default_parallelism()
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    is_local = master.startswith("local")
     if shuffle_partitions is None:
         # Size shuffle partitions to the DATA, not the core count
         # (round 10): at the local test SFs a 600k-row shuffle split 32
@@ -64,15 +66,9 @@ def get_spark(
         # 97 queries within 2x of DuckDB, with NO query regressing
         # beyond noise.  Non-local masters keep the core-count default
         # and, under AQE, coalesce from a high initial number — at
-        # 100 TB you RAISE this (or let AQE pick it); the env override
-        # is the knob either way.
-        is_local_master = master.startswith("local")
-        shuffle_partitions = int(
-            os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-                "8" if is_local_master else str(min(cpus, 32)),
-            )
-        )
+        # 100 TB you RAISE this (or let AQE pick it) through this
+        # parameter.
+        shuffle_partitions = 8 if is_local else min(cpus, 32)
 
     # AQE + runtime bloom filters are unconditional wins on a cluster
     # (runtime re-plan, skew splitting, semi-join reduction) but carry a
@@ -83,22 +79,17 @@ def get_spark(
     # 0.92 -> 0.46, 9 jobs -> 3), and bloom-filter injection adds an
     # aggregate subquery per join whose build side here is a few KB
     # (tpch_q09 0.42 -> 0.30).  On local[...] masters both default OFF;
-    # any non-local master keeps them ON.  SPARK_GRAFT_AQE=1 /
-    # SPARK_GRAFT_RUNTIME_FILTERS=1 force them back on locally (the
-    # sf1x/sf3x scale-convergence runs exercise both states).
-    is_local = master.startswith("local")
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "0" if is_local else "1") == "1"
-    rtf = (
-        os.environ.get("SPARK_GRAFT_RUNTIME_FILTERS", "0" if is_local else "1")
-        == "1"
-    )
+    # any non-local master keeps them ON.  Both are runtime SQL confs:
+    # ``extra_conf`` or ``spark.conf.set`` turns them back on locally
+    # (tests/test_aqe_parity.py runs the cluster posture that way).
+    cluster_posture = str(not is_local).lower()
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
         # --- determinism / oracle parity ---
         .config("spark.sql.session.timeZone", "UTC")
         # --- adaptive execution (runtime re-plan ≈ Presto AQE-ish rules) ---
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
+        .config("spark.sql.adaptive.enabled", cluster_posture)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -114,7 +105,7 @@ def get_spark(
         # (the bucketed-merge plan test opts back in explicitly).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # --- runtime filtering (≈ DynamicFilterSourceOperator) ---
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", str(rtf).lower())
+        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", cluster_posture)
         .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
         # --- scan efficiency ---
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
@@ -140,30 +131,12 @@ def get_spark(
         # vs G1 7.3/4.6/8.0/5.5/5.5 s) and 8/10 per-query minima, -6%
         # on the sum of minima.  Same recommendation class as the Spark
         # tuning guide's GC section for throughput-bound executors —
-        # not a local-mode trick; override with SPARK_GRAFT_GC (e.g.
-        # "-XX:+UseG1GC") where pause times matter.  Takes effect only
-        # at JVM launch (bench/driver/tests all start fresh JVMs
-        # through here).
-        # ADVICE r15: the flag must reach EXECUTORS too (on a cluster the
-        # batch work runs there; in local mode executor opts are unused
-        # and harmless), and a deployment-provided extraJavaOptions must
-        # not be silently clobbered — SPARK_GRAFT_GC_EXTRA appends.
-        .config(
-            "spark.driver.extraJavaOptions",
-            (
-                os.environ.get("SPARK_GRAFT_GC", "-XX:+UseParallelGC")
-                + " "
-                + os.environ.get("SPARK_GRAFT_GC_EXTRA", "")
-            ).strip(),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            (
-                os.environ.get("SPARK_GRAFT_GC", "-XX:+UseParallelGC")
-                + " "
-                + os.environ.get("SPARK_GRAFT_GC_EXTRA", "")
-            ).strip(),
-        )
+        # not a local-mode trick.  Takes effect only at JVM launch
+        # (bench/driver/tests all start fresh JVMs through here).  Only
+        # the driver JVM is set: local masters run their executors in
+        # it, and a cluster keeps its own spark-defaults
+        # spark.executor.extraJavaOptions (or passes it in extra_conf).
+        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         # Generated-class cache sized to the workload (round 15): the
         # bench loop carries 104 distinct queries x several codegen
         # units each; the default 100-entry cache thrashes between

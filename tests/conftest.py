@@ -24,7 +24,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
     spark = get_spark("presto-copy-spark-tests", master="local[8]")
     register_all(spark)
     yield spark

@@ -179,6 +179,24 @@ def test_semantic_dedup_drops_planted_copies(spark, sf_dir):
         assert cos > 0.999
 
 
+def test_semantic_pair_kernel_never_pairs_an_id_with_itself(spark):
+    """The pair rule is keeper vec_id < dup vec_id, as in the oracle's
+    self-join, not sorted position: a vec_id repeated within a cluster
+    (a re-ingested row, or a planted id colliding with a natural one)
+    must neither drop itself nor yield two rows for one dropped id."""
+    from presto_copy_spark.operators.similarity import qdot
+    from presto_copy_spark.queries.similarity import _sem_pair_reduce_numpy
+
+    x, z = [1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]
+    base = spark.createDataFrame(
+        [(0, 3, z), (0, 7, x), (0, 7, x), (0, 9, x), (0, 11, z), (0, 11, x)],
+        "cluster long, vec_id long, embedding array<float>",
+    ).withColumn("nq", qdot(F.col("embedding"), F.col("embedding")))
+    rows = _sem_pair_reduce_numpy(base).collect()
+    assert all(r.dropped_vec_id != r.kept_vec_id for r in rows), rows
+    assert sorted(map(tuple, rows)) == [(9, 7, 1.0), (11, 3, 1.0)], rows
+
+
 def test_temperature_mix_upweights_small_sources(spark, sf_dir):
     """alpha = 0.5 temperature sampling must give SMALLER sources a
     keep-rate at least as high as larger ones (the whole point of the

@@ -181,8 +181,8 @@ PIPELINE_QUERIES = (
     # round-14: exact-substring spans + the learned quality gate.
     # CAVEAT for docs_quality_classifier in THIS tool: its training
     # runs driver-side at DataFrame build, so the noop-save timing here
-    # prices scoring only — use tools/r14_classifier_decades.py for the
-    # train-inclusive decade numbers (BASELINE.md §r14).
+    # prices scoring only — the train-inclusive decade numbers are in
+    # BASELINE.md §r14.
     "dedup_exact_substring,docs_quality_classifier"
 )
 
@@ -223,13 +223,7 @@ def main() -> None:
     # these sweeps get the full core count (session.py sizing note).
     from presto_copy_spark.session import default_parallelism
 
-    spark = get_spark(
-        "scale-convergence",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "")
-            or default_parallelism()
-        ),
-    )
+    spark = get_spark("scale-convergence", shuffle_partitions=default_parallelism())
     layouts = build_layouts(spark, include_sf3x=True, include_sf10x=args.sf10x)
     if args.layouts:
         keep = set(args.layouts.split(","))
