@@ -26,6 +26,16 @@ a docstring:
   only the new dump pays a shuffle — the test asserts the bucketed
   plan carries strictly fewer exchanges than the identical probe
   against unbucketed tables.
+- ``append_to_prior_index`` folds an accepted dump into both tables
+  in place.  Every write — the persist and each append — reaches the
+  writer through an exchange on the table's bucket function
+  (``sources.connectors``), so it lands as at most one file per
+  bucket and the index holds O(buckets x generations) files, however
+  parallel the writing plan.
+- ``{prefix}_bloom``, the optional Bloom pre-filter over the prior
+  fps, is built on first use by a ``use_bloom`` probe and dropped by
+  every append before it writes anything, so no probe can read a
+  Bloom that misses fps already in ``{prefix}_fp``.
 """
 
 from __future__ import annotations
@@ -123,6 +133,23 @@ def bloom_might_contain(fp, bits, m_bits: int):
     return cond
 
 
+def _fp_bloom(spark: SparkSession, prefix: str) -> tuple[DataFrame, int]:
+    """(one-row ``bits`` frame, m_bits) of ``{prefix}_bloom``, building
+    the table from ``{prefix}_fp`` first when it is absent — on the
+    first ``use_bloom`` probe after a persist or an append.  The
+    count() sizing the bit array and the m_bits read are one-row
+    scalars read back into Python: the mask width is baked
+    into the probe."""
+    from ..sources.connectors import create_table_as
+
+    name = f"{prefix}_bloom"
+    if not spark.catalog.tableExists(name):
+        fps = spark.table(f"{prefix}_fp")
+        create_table_as(spark, name, build_fp_bloom(fps, _bloom_m_bits(fps.count())))
+    bl = spark.table(name)
+    return bl.select("bits"), bl.select("m_bits").first()[0]
+
+
 def _band_key_col(prof: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     """Explode a minhash profile into (doc_id, n, sh_set, band_key)
     rows; band_key = '<band_idx>:<band_sig>' so bucketing and the probe
@@ -148,12 +175,18 @@ def persist_prior_index(
     prefix: str,
     n_buckets: int = N_BUCKETS,
 ) -> None:
-    """Build the frozen corpus's dedup index once per generation."""
+    """Build the frozen corpus's dedup index once per generation:
+    ``{prefix}_fp`` and ``{prefix}_bands``, each written as at most one
+    file per bucket.  No Bloom is built here; a ``use_bloom`` probe
+    builds ``{prefix}_bloom`` on first use."""
     # lazy imports: the profile/fingerprint definitions live with the
     # inline operator so the two paths can never drift apart
     from ..queries.text import N_BANDS, N_HASHES, _minhash_profile
     from ..sources.connectors import create_bucketed_table, preclean_managed_table
     from .text import hash60
+
+    # a Bloom left by an earlier generation under this prefix is stale
+    preclean_managed_table(spark, f"{prefix}_bloom")
 
     fp = prior_docs.select(hash60(F.col("text")).alias("fp")).distinct()
     create_bucketed_table(spark, f"{prefix}_fp", fp, ["fp"], n_buckets, ["fp"])
@@ -163,18 +196,6 @@ def persist_prior_index(
     create_bucketed_table(
         spark, f"{prefix}_bands", bands, ["band_key"], n_buckets, ["band_key"]
     )
-    # broadcast Bloom over the prior fps (round 14): built ONCE here at
-    # persist time, so every probe — batch or streaming — can split the
-    # incoming dump in-scan into definite-keeps (the overwhelming mass
-    # of a real crawl; no shuffle, no join) and candidates (only they
-    # pay the bucketed merge-join).  The count() sizing the bit array
-    # is a persist-time driver scalar, same bounded class as the
-    # ANALYZE stats write.
-    m_bits = _bloom_m_bits(spark.table(f"{prefix}_fp").count())
-    preclean_managed_table(spark, f"{prefix}_bloom")
-    build_fp_bloom(spark.table(f"{prefix}_fp"), m_bits).write.mode(
-        "overwrite"
-    ).saveAsTable(f"{prefix}_bloom")
 
 
 def dedup_against_prior(
@@ -191,7 +212,10 @@ def dedup_against_prior(
     they bypass the exact join entirely (no shuffle) — and only the
     candidate mass (true dups + <=0.5% false positives) pays the
     bucketed merge-join.  Output is bit-identical either way (no false
-    negatives; tests/test_pipeline.py proves equality).
+    negatives; tests/test_pipeline.py proves equality).  The Bloom is
+    built from ``{prefix}_fp`` on the first such probe after a persist
+    or an append (``append_to_prior_index`` drops it before writing),
+    so it always covers every fp the exact join would find.
 
     Default OFF on evidence (round-14 A/B, BASELINE.md §r14): the
     split's two branches each re-derive fp = md5(text) from the scan —
@@ -210,12 +234,9 @@ def dedup_against_prior(
     pbands = spark.table(f"{prefix}_bands")
 
     nf = new_docs.select("doc_id", "text", hash60(F.col("text")).alias("fp"))
-    if use_bloom and spark.catalog.tableExists(f"{prefix}_bloom"):
-        bl = spark.table(f"{prefix}_bloom")
-        # one-row plan-build metadata read (bounded, the index_join
-        # typed-refusal class): the mask width is baked into the probe
-        m_bits = bl.select("m_bits").first()[0]
-        probed = nf.crossJoin(F.broadcast(bl.select("bits"))).withColumn(
+    if use_bloom:
+        bits, m_bits = _fp_bloom(spark, prefix)
+        probed = nf.crossJoin(F.broadcast(bits)).withColumn(
             "maybe", bloom_might_contain(F.col("fp"), F.col("bits"), m_bits)
         )
         cand = probed.filter(F.col("maybe")).select("doc_id", "text", "fp")
@@ -289,15 +310,15 @@ def stream_dedup_against_prior(
     micro-batch the same way as the batch probe — bloom-negatives emit
     immediately with no join, only candidates anti-join the bucketed
     fp table.  Default OFF for the same measured reason as
-    ``dedup_against_prior`` (the split re-hashes the batch twice)."""
+    ``dedup_against_prior`` (the split re-hashes the batch twice).  The
+    Bloom is built on first use, as in ``dedup_against_prior``."""
     from .text import hash60
 
     pfp = spark.table(f"{prefix}_fp")
     hashed = new_stream.withColumn("fp", hash60(F.col("text")))
-    if use_bloom and spark.catalog.tableExists(f"{prefix}_bloom"):
-        bl = spark.table(f"{prefix}_bloom")
-        m_bits = bl.select("m_bits").first()[0]
-        probed = hashed.crossJoin(F.broadcast(bl.select("bits"))).withColumn(
+    if use_bloom:
+        bits, m_bits = _fp_bloom(spark, prefix)
+        probed = hashed.crossJoin(F.broadcast(bits)).withColumn(
             "maybe", bloom_might_contain(F.col("fp"), F.col("bits"), m_bits)
         )
         sure_new = probed.filter(~F.col("maybe")).drop("maybe", "bits", "fp")
@@ -315,29 +336,35 @@ def append_to_prior_index(
     WITHOUT rebuilding it — the corpus-generation maintenance op a real
     pipeline runs after each dump is deduped and kept.
 
-    Spark routes ``insertInto`` on a bucketed datasource table through
-    the catalog's bucket spec (verified: a post-append self-join still
-    reads in place — SelectedBucketsCount, zero exchanges), so the
-    appended fp/band rows land in the same layout the probe merge-joins
-    against; only the dump-sized increment is hashed and written, never
-    the existing index.  BOTH increments anti-join the existing table
-    — fp on fp, bands on (doc_id, band_key) — so a RETRY after a
-    partial failure converges to exactly the fresh-rebuild state
-    instead of double-inserting band rows (output would survive thanks
-    to the probe's distinct(), but probe cost would silently inflate).
+    Both increments go through ``sources.connectors.insert_into``,
+    which exchanges them on the table's own bucket spec before
+    ``insertInto``: each append writes at most one file per bucket per
+    table, and the rows land in the same layout the probe merge-joins
+    against (a post-append probe still reads in place —
+    SelectedBucketsCount).  Only the dump-sized increment is hashed
+    and written, never the existing index.  BOTH increments anti-join
+    the existing table — fp on fp, bands on (doc_id, band_key) — so a
+    RETRY after a partial failure converges to exactly the
+    fresh-rebuild state instead of double-inserting band rows (output
+    would survive thanks to the probe's distinct(), but probe cost
+    would silently inflate).
     Insert order is bands first, fp LAST: fp is the increment's own
     anti-join guard, so committing it last means a crash anywhere
     mid-append leaves the fp rows absent and the retry redoes the whole
-    dump, with the bands anti-join absorbing whatever landed.  The
-    Bloom is REBUILT from the full fp table (not OR-merged): the
-    bit-array size is a function of the growing key count, and the
-    build is one cheap map-side-combined pass over longs — rebuilding
-    keeps the fpp at its design point instead of degrading as the
-    corpus grows."""
+    dump, with the bands anti-join absorbing whatever landed.
+
+    ``{prefix}_bloom`` is dropped BEFORE the first insert, not rebuilt
+    after the last: a Bloom that outlived a failed append would miss
+    fps already committed to ``{prefix}_fp``, and a ``use_bloom``
+    probe would wave their re-crawls past the exact join.  The next
+    ``use_bloom`` probe rebuilds it from the full fp table, sized to
+    the grown key count, and appends under the default probe never
+    pay for it."""
     from ..queries.text import N_BANDS, N_HASHES, _minhash_profile
-    from ..sources.connectors import preclean_managed_table
+    from ..sources.connectors import insert_into, preclean_managed_table
     from .text import hash60
 
+    preclean_managed_table(spark, f"{prefix}_bloom")
     fp_inc = (
         accepted_docs.select(hash60(F.col("text")).alias("fp"))
         .distinct()
@@ -354,10 +381,5 @@ def append_to_prior_index(
         # join columns first, so restore the table's column order
         .select("doc_id", "n", "sh_set", "band_key")
     )
-    bands_inc.write.insertInto(f"{prefix}_bands", overwrite=False)
-    fp_inc.write.insertInto(f"{prefix}_fp", overwrite=False)
-    m_bits = _bloom_m_bits(spark.table(f"{prefix}_fp").count())
-    preclean_managed_table(spark, f"{prefix}_bloom")
-    build_fp_bloom(spark.table(f"{prefix}_fp"), m_bits).write.mode(
-        "overwrite"
-    ).saveAsTable(f"{prefix}_bloom")
+    insert_into(f"{prefix}_bands", bands_inc)
+    insert_into(f"{prefix}_fp", fp_inc)

@@ -287,30 +287,37 @@ def pq_code_structs(arr: Column, pq: Column, n_sub: int, sub_dim: int) -> Column
     )
 
 
-def pq_lut_indexes(arr: Column, pq: Column, n_sub: int, sub_dim: int) -> Column:
-    """array<int> of length n_sub: for each subquantizer m, the 1-based
-    POSITION of `arr`'s nearest code within the flattened
-    (m, code)-ordered LUT array that ``pq_lut_structs`` produces.
+def pq_lut_indexes(arr: Column, pq: Column, sub_dim: int) -> Column:
+    """array<int>, one entry per codebook in `pq`: for each
+    subquantizer, the 1-based POSITION of `arr`'s nearest code within
+    the flattened (m, code)-ordered LUT array that ``pq_lut_structs``
+    produces.
 
     Positions, not m*K+code, because trained codebooks may be SPARSE (a
     seed code with no training members drops out), so the flat LUT of a
-    query is position-indexed.  The argmin is the same integer L2 /
-    (dist, k) tie-break as hof_argmin — the winning position is the
-    winning code's slot, since cents are array_sort'ed by k."""
+    query is position-indexed.  The offsets come from the same walk
+    over `pq` as ``pq_lut_structs`` (the subvector slice from each
+    entry's own ``m``), so a codebook with a whole subquantizer missing
+    still indexes the slots its LUT holds.  The argmin is the same
+    integer L2 / (dist, k) tie-break as hof_argmin — the winning
+    position is the winning code's slot, since cents are array_sort'ed
+    by k."""
     sizes = F.transform(pq, lambda pm: F.size(pm["cents"]))
     return F.transform(
-        F.sequence(F.lit(0), F.lit(n_sub - 1)),
-        lambda m: (
+        pq,
+        lambda pm, i: (
             F.aggregate(
-                F.slice(sizes, F.lit(1), m), F.lit(0), lambda a, v: a + v
+                F.slice(sizes, F.lit(1), i), F.lit(0), lambda a, v: a + v
             )
             + F.array_min(
                 F.transform(
-                    F.element_at(pq, (m + 1).cast("int"))["cents"],
-                    lambda c, i: F.struct(
+                    pm["cents"],
+                    lambda c, j: F.struct(
                         F.aggregate(
                             F.zip_with(
-                                F.slice(arr, m * sub_dim + 1, sub_dim),
+                                F.slice(
+                                    arr, pm["m"].cast("int") * sub_dim + 1, sub_dim
+                                ),
                                 c["cv_arr"],
                                 lambda a, b: (a - b) * (a - b),
                             ),
@@ -318,7 +325,7 @@ def pq_lut_indexes(arr: Column, pq: Column, n_sub: int, sub_dim: int) -> Column:
                             lambda acc, v: acc + v,
                         ).alias("dist"),
                         c["k"].alias("k"),
-                        i.alias("pos"),
+                        j.alias("pos"),
                     ),
                 )
             )["pos"]

@@ -589,7 +589,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle CTEs unchanged.
     codes_packed = corpus.crossJoin(F.broadcast(pq1)).select(
         "vec_id",
-        pq_lut_indexes(F.col("qarr"), F.col("pq"), PQ_M, PQ_SUB).alias("lidx"),
+        pq_lut_indexes(F.col("qarr"), F.col("pq"), PQ_SUB).alias("lidx"),
     )
     # per-query LUT: the M x K integer table built row-locally from the
     # packed codebooks, kept as ONE flat array<long> per query in
@@ -781,7 +781,7 @@ def ivfadc_encode(assigned: DataFrame, pq1: DataFrame) -> DataFrame:
     return assigned.crossJoin(F.broadcast(pq1)).select(
         "vec_id",
         "cell",
-        pq_lut_indexes(F.col("rarr"), F.col("pq"), PQ_M, PQ_SUB).alias("lidx"),
+        pq_lut_indexes(F.col("rarr"), F.col("pq"), PQ_SUB).alias("lidx"),
     )
 
 

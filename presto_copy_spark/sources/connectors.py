@@ -19,6 +19,7 @@ AQE coalesces write tasks (ScaledWriterRule analogue).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -139,16 +140,55 @@ def create_bucketed_table(
     the dominant shuffle into a local merge — the single biggest layout
     lever a pipeline owns.  sort_cols additionally pre-sorts within
     buckets so SortMergeJoin skips its sort.
+
+    The rows reach the writer through an exchange on the bucket
+    function, so each bucket has exactly one writer task and one file
+    (Presto routes a bucketed TableWriterOperator the same way).
+    Spark's datasource bucket id and ``repartition(n, cols)`` are the
+    same ``pmod(murmur3(cols), n)``; without the exchange every write
+    task would emit one file per bucket it happens to hold.
     """
     preclean_managed_table(spark, name)
-    w = df.write.format(fmt).mode("overwrite").bucketBy(n_buckets, *bucket_cols)
+    w = (
+        df.repartition(n_buckets, *bucket_cols)
+        .write.format(fmt)
+        .mode("overwrite")
+        .bucketBy(n_buckets, *bucket_cols)
+    )
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(name)
 
 
+def _bucket_spec(spark: SparkSession, name: str) -> tuple[int, list[str]] | None:
+    """(Num Buckets, Bucket Columns) of a catalog table, or None when it
+    is not bucketed — read from ``DESCRIBE TABLE EXTENDED``."""
+    info = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    }
+    if "Num Buckets" not in info:
+        return None
+    # Bucket Columns renders as [`a`, `b`], with ` inside a name doubled
+    cols = [
+        c.replace("``", "`")
+        for c in re.findall(r"`((?:[^`]|``)*)`", info["Bucket Columns"])
+    ]
+    return int(info["Num Buckets"]), cols
+
+
 def insert_into(name: str, df: DataFrame) -> None:
-    """INSERT INTO (append semantics — TableWriterOperator append)."""
+    """INSERT INTO (append semantics — TableWriterOperator append).
+
+    Into a bucketed table the rows are first exchanged on the table's
+    own bucket spec, as in ``create_bucketed_table``: each append then
+    writes one file per bucket it touches instead of one per (write
+    task, bucket) pair, so the table's file count grows with its
+    bucket count, not with the appending plan's parallelism."""
+    spec = _bucket_spec(df.sparkSession, name)
+    if spec is not None:
+        n_buckets, cols = spec
+        df = df.repartition(n_buckets, *cols)
     df.write.insertInto(name, overwrite=False)
 
 

@@ -1,7 +1,9 @@
 """Regression tests for the round-2 ADVICE.md findings (advisor review):
 json_parse NULL propagation, json_extract_scalar non-scalar -> NULL,
 bar(p, 1) degenerate width, render() of system colors via the Column
-path, and transpile robustness on degenerate literal color calls.
+path, and transpile robustness on degenerate literal color calls;
+later findings: PQ LUT positions over a codebook missing a
+subquantizer, and the bench's final-line length guard.
 """
 
 from __future__ import annotations
@@ -556,3 +558,70 @@ def test_json_topkey_int_fastpath_fuzz_agreement(spark):
     )
     for r in both:
         assert r["fast"] == r["slow"], (r["props"], r["fast"], r["slow"])
+
+
+def test_pq_lut_indexes_codebook_missing_a_subquantizer(spark):
+    # A trained codebook can lose a whole subquantizer (no entry for
+    # m=1 here).  The packed LUT positions must still address the slots
+    # pq_lut_structs lays out for the codebooks that are present,
+    # instead of reading m=2's codes against m=1's subvector.
+    from presto_copy_spark.operators.similarity import (
+        pq_lut_indexes,
+        pq_lut_structs,
+    )
+
+    cents = "array<struct<k:int,cv_arr:array<bigint>>>"
+    df = spark.createDataFrame(
+        [
+            (
+                [9, 9, 100, 100, 1, 2],
+                [
+                    (0, [(0, [0, 0]), (2, [10, 10])]),
+                    (2, [(0, [5, 5]), (1, [1, 1]), (3, [9, 9])]),
+                ],
+            )
+        ],
+        f"arr array<bigint>, pq array<struct<m:int,cents:{cents}>>",
+    )
+    row = df.select(
+        pq_lut_indexes(F.col("arr"), F.col("pq"), 2).alias("lidx"),
+        F.transform(
+            pq_lut_structs(F.col("arr"), F.col("pq"), 2), lambda e: e["ldist"]
+        ).alias("larr"),
+    ).first()
+    # flat LUT: m=0 -> k0 162, k2 2; m=2 -> k0 25, k1 1, k3 113
+    assert row.larr == [162, 2, 25, 1, 113]
+    assert row.lidx == [2, 4]
+    # ADC distance = sum of each present subquantizer's nearest code
+    assert sum(row.larr[i - 1] for i in row.lidx) == 2 + 1
+
+
+def test_bench_final_line_fits_the_tail_window():
+    # Only a bounded tail of bench.py's stdout is parsed: an over-budget
+    # final line drops its per-query dicts and keeps every headline scalar.
+    import json
+
+    import bench
+
+    summary = {
+        "metric": "median_query_seconds_total",
+        "value": 12.5,
+        "n_queries": 3,
+        "queries": {"tpch_q01": 0.5},
+        "detail": "BENCH_detail.json",
+    }
+    line = bench.final_line(summary)
+    assert json.loads(line) == summary
+    summary["sf1x_tpch_sec"] = {
+        f"tpch_q{i:02d}_at_a_much_longer_name": 1.23456789 for i in range(100)
+    }
+    line = bench.final_line(summary)
+    assert len(line) <= bench.FINAL_LINE_BUDGET
+    parsed = json.loads(line)
+    assert parsed == {
+        "metric": "median_query_seconds_total",
+        "value": 12.5,
+        "n_queries": 3,
+        "detail": "BENCH_detail.json",
+        "per_query_dropped": True,
+    }

@@ -815,6 +815,150 @@ def test_append_to_prior_index_matches_fresh_rebuild(spark, sf_dir):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def _two_generations(spark, sf_dir):
+    """(g1, g2, probe): two disjoint corpus generations and a later
+    dump carrying fresh docs plus verbatim re-crawls of both."""
+    from presto_copy_spark.catalog import load_table
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    g1 = d.filter(F.col("doc_id") % 3 == 0)
+    g2 = d.filter(F.col("doc_id") % 3 == 1)
+    off = 10_000_000
+    probe = (
+        d.filter(F.col("doc_id") % 3 == 2)
+        .unionByName(
+            g1.filter(F.col("doc_id") % 21 == 0).select(
+                (F.col("doc_id") + off).alias("doc_id"), "text"
+            )
+        )
+        .unionByName(
+            g2.filter(F.col("doc_id") % 22 == 1).select(
+                (F.col("doc_id") + 2 * off).alias("doc_id"), "text"
+            )
+        )
+    )
+    return g1, g2, probe
+
+
+def test_prior_index_writes_one_file_per_bucket(spark, sf_dir):
+    """Each write of the persisted index (the persist and every append)
+    reaches the writer through an exchange on the bucket function, so
+    one write generation holds at most one file per bucket — not one
+    per (write task, bucket) pair — and the appended index is still
+    probed in place."""
+    import re
+    from collections import Counter
+
+    from presto_copy_spark.operators.incremental import (
+        append_to_prior_index,
+        dedup_against_prior,
+        persist_prior_index,
+    )
+    from presto_copy_spark.plans.inspect import plan_string
+
+    g1, g2, probe = _two_generations(spark, sf_dir)
+    # bucketed data files are part-<task>-<write job uuid>_<bucket id>...
+    name = re.compile(r"part-\d+-([0-9a-f-]{36})_(\d{5})\.")
+    try:
+        persist_prior_index(spark, g1, "t_opb_idx", n_buckets=4)
+        append_to_prior_index(spark, g2, "t_opb_idx")
+        for t in ("t_opb_idx_fp", "t_opb_idx_bands"):
+            files = [f.rsplit("/", 1)[1] for f in spark.table(t).inputFiles()]
+            keys = [name.match(f).groups() for f in files]
+            per_write = Counter(job for job, _ in keys)
+            assert len(per_write) == 2, (t, files)
+            assert max(per_write.values()) <= 4, (t, files)
+            assert len(set(keys)) == len(keys), (t, files)
+        plan = plan_string(dedup_against_prior(spark, probe, "t_opb_idx"), "simple")
+        assert "SelectedBucketsCount" in plan
+    finally:
+        for t in ("t_opb_idx_fp", "t_opb_idx_bands", "t_opb_idx_bloom"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_append_drops_bloom_before_writing(spark, sf_dir, tmp_path, monkeypatch):
+    """A Bloom that outlives a failed append misses fps the fp table may
+    already hold, and a use_bloom probe would then wave re-crawls past
+    the exact join.  The append drops ``{prefix}_bloom`` before its
+    first insert, and a use_bloom probe rebuilds it on first use, so
+    Bloom-split probes — batch and streaming — label like a fresh
+    rebuild after an append."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from presto_copy_spark.operators.incremental import (
+        append_to_prior_index,
+        dedup_against_prior,
+        persist_prior_index,
+        stream_dedup_against_prior,
+    )
+    from presto_copy_spark.operators.text import hash60
+    from presto_copy_spark.streaming.jobs import run_stream_to_batch
+
+    g1, g2, probe = _two_generations(spark, sf_dir)
+
+    def labels(prefix, **kw):
+        out = dedup_against_prior(spark, probe, prefix, **kw)
+        return sorted(map(tuple, out.collect()))
+
+    real_insert = DataFrameWriter.insertInto
+
+    def failing_fp_insert(self, tableName, overwrite=None):
+        if tableName.endswith("_fp"):
+            raise RuntimeError("injected fp insert failure")
+        return real_insert(self, tableName, overwrite)
+
+    try:
+        persist_prior_index(spark, g1, "t_blm_idx", n_buckets=4)
+        # the first use_bloom probe builds the Bloom over g1's fps
+        assert labels("t_blm_idx", use_bloom=True) == labels("t_blm_idx")
+        assert spark.catalog.tableExists("t_blm_idx_bloom")
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrameWriter, "insertInto", failing_fp_insert)
+            with pytest.raises(RuntimeError, match="injected fp insert failure"):
+                append_to_prior_index(spark, g2, "t_blm_idx")
+        assert not spark.catalog.tableExists("t_blm_idx_bloom")
+
+        append_to_prior_index(spark, g2, "t_blm_idx")  # the retry
+        assert not spark.catalog.tableExists("t_blm_idx_bloom")
+        persist_prior_index(spark, g1.unionByName(g2), "t_blm_fresh", n_buckets=4)
+        want = labels("t_blm_fresh")
+        assert labels("t_blm_idx", use_bloom=True) == want
+        assert spark.catalog.tableExists("t_blm_idx_bloom")
+
+        # the streaming Bloom split keeps exactly what the fresh
+        # rebuild's exact stage keeps
+        spark.sql("DROP TABLE t_blm_idx_bloom")
+        dump = str(tmp_path / "dump")
+        probe.write.parquet(dump)
+        schema = spark.read.parquet(dump).schema
+        stream = spark.readStream.schema(schema).format("parquet").load(dump)
+        out = run_stream_to_batch(
+            stream_dedup_against_prior(stream, spark, "t_blm_idx", use_bloom=True),
+            mode="append",
+        )
+        got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
+        kept = (
+            probe.withColumn("fp", hash60(F.col("text")))
+            .join(spark.table("t_blm_fresh_fp"), "fp", "left_anti")
+            .select("doc_id")
+            .collect()
+        )
+        assert got == sorted(r["doc_id"] for r in kept)
+        assert not [i for i in got if i >= 20_000_000]  # g2 re-crawls dropped
+    finally:
+        for t in (
+            "t_blm_idx_fp",
+            "t_blm_idx_bands",
+            "t_blm_idx_bloom",
+            "t_blm_fresh_fp",
+            "t_blm_fresh_bands",
+            "t_blm_fresh_bloom",
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_quality_classifier_null_text_scores_on_bias(spark):
     """A NULL text must not null the feature vector (concat(NULL, bias)
     trap): both engines score such a doc on the bias pseudo-counts
