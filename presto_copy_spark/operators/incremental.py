@@ -32,10 +32,13 @@ a docstring:
   (``sources.connectors``), so it lands as at most one file per
   bucket and the index holds O(buckets x generations) files, however
   parallel the writing plan.
-- ``{prefix}_bloom``, the optional Bloom pre-filter over the prior
-  fps, is built on first use by a ``use_bloom`` probe and dropped by
-  every append before it writes anything, so no probe can read a
-  Bloom that misses fps already in ``{prefix}_fp``.
+- ``stream_dedup_against_prior`` is the streaming form of the exact
+  stage: a stream-static left-anti join against ``{prefix}_fp``.
+
+Runtime filtering of the probe side is left to the engine (Spark's
+dynamic partition pruning and, on cluster masters, its runtime join
+filters, both set in ``session.py``), as Presto leaves it to its
+``DynamicFilterSourceOperator``.
 """
 
 from __future__ import annotations
@@ -48,107 +51,9 @@ __all__ = [
     "append_to_prior_index",
     "dedup_against_prior",
     "stream_dedup_against_prior",
-    "build_fp_bloom",
-    "bloom_might_contain",
 ]
 
 N_BUCKETS = 32
-
-# ---- broadcast Bloom pre-filter over the prior fingerprints ---------------
-# (round 14, VERDICT r13 ask #7).  Spark's own BloomFilterAggregate /
-# might_contain pair is not SQL-registered in this build (it is
-# injected only by the runtime-filter rule), so the filter is built
-# from BUILT-INS: k=3 positions from three independent xxhash64 draws
-# (seed column varies; no combining arithmetic, so ANSI overflow
-# checking never trips), bit words OR-folded with bit_or into one
-# packed array<long> row.  Everything — build and probe — stays inside
-# whole-stage codegen.  SCALE CEILING (stated honestly): the build
-# packs ALL words into ONE array<long> in ONE row via collect_list +
-# transform(sequence(...)), so it is bounded by Spark's single-object
-# limits — one task densifies the array and one row must hold it.  In
-# practice that caps m_bits around the low billions (a few hundred MB
-# per row); the docstring's former "billion-fp prior at 16 bits/key is
-# 2 GB" case does NOT fit this representation.  Past that, store the
-# bloom as a multi-row (word_range, array<long>) table and range-join
-# the probe — same no-false-negative contract, no single-row funnel.
-# At fixture scales the packed row is KBs.  fpp ≈ (1-e^(-3/16))^3 ≈ 0.5%.
-BLOOM_BITS_PER_KEY = 16
-BLOOM_K = 3
-
-
-def _bloom_m_bits(n_keys: int) -> int:
-    """Bit-array size: next power of two >= 16 * n_keys (pow2 so the
-    position reduction is a mask, not a modulo)."""
-    m = 64
-    while m < BLOOM_BITS_PER_KEY * max(1, n_keys):
-        m <<= 1
-    return m
-
-
-def _bloom_positions(fp, m_bits: int) -> list:
-    return [
-        F.xxhash64(fp, F.lit(i)).bitwiseAND(F.lit(m_bits - 1))
-        for i in range(BLOOM_K)
-    ]
-
-
-def build_fp_bloom(fps: DataFrame, m_bits: int) -> DataFrame:
-    """Fold a fingerprint column into ONE row {m_bits, bits:
-    array<long>}: explode each fp's k bit positions, OR-fold per
-    64-bit word (map-side combined, the shuffle carries at most
-    m_bits/64 rows), pack the sparse words into a dense array."""
-    pos = fps.select(
-        F.explode(
-            F.array(*_bloom_positions(F.col("fp"), m_bits))
-        ).alias("p")
-    )
-    words = pos.select(
-        F.shiftright("p", 6).cast("int").alias("w"),
-        F.expr("shiftleft(1L, CAST(p & 63 AS INT))").alias("mask"),
-    ).groupBy("w").agg(F.bit_or("mask").alias("word"))
-    return words.agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "word"))).alias("wm")
-    ).select(
-        F.lit(m_bits).alias("m_bits"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m_bits // 64 - 1)),
-            lambda i: F.coalesce(F.element_at("wm", i), F.lit(0).cast("long")),
-        ).alias("bits"),
-    )
-
-
-def bloom_might_contain(fp, bits, m_bits: int):
-    """Membership test against the packed words — false positives
-    possible (bounded by fpp), false negatives impossible."""
-    cond = None
-    for p in _bloom_positions(fp, m_bits):
-        mask = F.call_function(
-            "shiftleft",
-            F.lit(1).cast("long"),
-            p.bitwiseAND(F.lit(63)).cast("int"),
-        )
-        word = F.element_at(bits, (F.shiftright(p, 6) + 1).cast("int"))
-        hit = word.bitwiseAND(mask) != 0
-        cond = hit if cond is None else cond & hit
-    return cond
-
-
-def _fp_bloom(spark: SparkSession, prefix: str) -> tuple[DataFrame, int]:
-    """(one-row ``bits`` frame, m_bits) of ``{prefix}_bloom``, building
-    the table from ``{prefix}_fp`` first when it is absent — on the
-    first ``use_bloom`` probe after a persist or an append.  The
-    count() sizing the bit array and the m_bits read are one-row
-    scalars read back into Python: the mask width is baked
-    into the probe."""
-    from ..sources.connectors import create_table_as
-
-    name = f"{prefix}_bloom"
-    if not spark.catalog.tableExists(name):
-        fps = spark.table(f"{prefix}_fp")
-        create_table_as(spark, name, build_fp_bloom(fps, _bloom_m_bits(fps.count())))
-    bl = spark.table(name)
-    return bl.select("bits"), bl.select("m_bits").first()[0]
-
 
 def _band_key_col(prof: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     """Explode a minhash profile into (doc_id, n, sh_set, band_key)
@@ -177,16 +82,12 @@ def persist_prior_index(
 ) -> None:
     """Build the frozen corpus's dedup index once per generation:
     ``{prefix}_fp`` and ``{prefix}_bands``, each written as at most one
-    file per bucket.  No Bloom is built here; a ``use_bloom`` probe
-    builds ``{prefix}_bloom`` on first use."""
+    file per bucket."""
     # lazy imports: the profile/fingerprint definitions live with the
     # inline operator so the two paths can never drift apart
     from ..queries.text import N_BANDS, N_HASHES, _minhash_profile
-    from ..sources.connectors import create_bucketed_table, preclean_managed_table
+    from ..sources.connectors import create_bucketed_table
     from .text import hash60
-
-    # a Bloom left by an earlier generation under this prefix is stale
-    preclean_managed_table(spark, f"{prefix}_bloom")
 
     fp = prior_docs.select(hash60(F.col("text")).alias("fp")).distinct()
     create_bucketed_table(spark, f"{prefix}_fp", fp, ["fp"], n_buckets, ["fp"])
@@ -199,7 +100,7 @@ def persist_prior_index(
 
 
 def dedup_against_prior(
-    spark: SparkSession, new_docs: DataFrame, prefix: str, use_bloom: bool = False
+    spark: SparkSession, new_docs: DataFrame, prefix: str
 ) -> DataFrame:
     """Label a new crawl snapshot against a persisted prior index.
 
@@ -207,26 +108,10 @@ def dedup_against_prior(
     (outcome, n_docs, id_sum) with outcome in kept / dropped_exact /
     dropped_near.
 
-    With ``use_bloom`` the dump is split IN-SCAN by the broadcast Bloom
-    of prior fps: bloom-negative rows are definite non-duplicates —
-    they bypass the exact join entirely (no shuffle) — and only the
-    candidate mass (true dups + <=0.5% false positives) pays the
-    bucketed merge-join.  Output is bit-identical either way (no false
-    negatives; tests/test_pipeline.py proves equality).  The Bloom is
-    built from ``{prefix}_fp`` on the first such probe after a persist
-    or an append (``append_to_prior_index`` drops it before writing),
-    so it always covers every fp the exact join would find.
-
-    Default OFF on evidence (round-14 A/B, BASELINE.md §r14): the
-    split's two branches each re-derive fp = md5(text) from the scan —
-    the union arms share no common subexpression — so the probe pays
-    the expensive hash twice to save a 98%-reducible shuffle, and on
-    local[32] (where a shuffle is a memory copy) that trade LOSES:
-    1.19x/1.24x slower at sf1x/sf3x, paired in-window.  The filter
-    wins when the dump arrives pre-hashed (fp already a column: no
-    double hash, pure shuffle saving) or when shuffle means network —
-    flip the flag per deployment; the capability and its
-    no-false-negative guarantee are tested either way."""
+    Both stages are merge-joins against the bucketed tables: the exact
+    stage joins the dump's fps to ``{prefix}_fp``, and the near stage
+    joins the exact-stage survivors' band keys to ``{prefix}_bands``.
+    Each prior side is read in place; only the dump is exchanged."""
     from ..queries.text import JACCARD_T, N_BANDS, N_HASHES, _minhash_profile
     from .text import hash60
 
@@ -234,28 +119,11 @@ def dedup_against_prior(
     pbands = spark.table(f"{prefix}_bands")
 
     nf = new_docs.select("doc_id", "text", hash60(F.col("text")).alias("fp"))
-    if use_bloom:
-        bits, m_bits = _fp_bloom(spark, prefix)
-        probed = nf.crossJoin(F.broadcast(bits)).withColumn(
-            "maybe", bloom_might_contain(F.col("fp"), F.col("bits"), m_bits)
-        )
-        cand = probed.filter(F.col("maybe")).select("doc_id", "text", "fp")
-        sure_new = probed.filter(~F.col("maybe")).select(
-            "doc_id", "text", F.lit(False).alias("is_exact")
-        )
-        flagged = cand.join(
-            pfp.hint("merge").withColumnRenamed("fp", "pfp"),
-            F.col("fp") == F.col("pfp"),
-            "left",
-        ).select(
-            "doc_id", "text", F.col("pfp").isNotNull().alias("is_exact")
-        ).unionByName(sure_new)
-    else:
-        flagged = nf.join(
-            pfp.hint("merge").withColumnRenamed("fp", "pfp"),
-            F.col("fp") == F.col("pfp"),
-            "left",
-        ).select("doc_id", "text", F.col("pfp").isNotNull().alias("is_exact"))
+    flagged = nf.join(
+        pfp.hint("merge").withColumnRenamed("fp", "pfp"),
+        F.col("fp") == F.col("pfp"),
+        "left",
+    ).select("doc_id", "text", F.col("pfp").isNotNull().alias("is_exact"))
     survivors = flagged.filter(~F.col("is_exact")).select("doc_id", "text")
 
     bn = _band_key_col(
@@ -289,10 +157,7 @@ def dedup_against_prior(
 
 
 def stream_dedup_against_prior(
-    new_stream: DataFrame,
-    spark: SparkSession,
-    prefix: str,
-    use_bloom: bool = False,
+    new_stream: DataFrame, spark: SparkSession, prefix: str
 ) -> DataFrame:
     """Streaming ingest form of the exact stage: an arriving crawl dump
     (readStream of (doc_id, text) files) is deduped against the FROZEN
@@ -304,29 +169,15 @@ def stream_dedup_against_prior(
     index refreshes once per corpus generation while dumps stream in
     (near-dup banding stays in the per-dump batch pass — a streaming
     band probe would need watermarked aggregation state for no
-    benefit, since band verification is dump-local anyway).
-
-    Round 14: with ``use_bloom`` the broadcast Bloom splits each
-    micro-batch the same way as the batch probe — bloom-negatives emit
-    immediately with no join, only candidates anti-join the bucketed
-    fp table.  Default OFF for the same measured reason as
-    ``dedup_against_prior`` (the split re-hashes the batch twice).  The
-    Bloom is built on first use, as in ``dedup_against_prior``."""
+    benefit, since band verification is dump-local anyway)."""
     from .text import hash60
 
     pfp = spark.table(f"{prefix}_fp")
-    hashed = new_stream.withColumn("fp", hash60(F.col("text")))
-    if use_bloom:
-        bits, m_bits = _fp_bloom(spark, prefix)
-        probed = hashed.crossJoin(F.broadcast(bits)).withColumn(
-            "maybe", bloom_might_contain(F.col("fp"), F.col("bits"), m_bits)
-        )
-        sure_new = probed.filter(~F.col("maybe")).drop("maybe", "bits", "fp")
-        cand = probed.filter(F.col("maybe")).drop("maybe", "bits")
-        return cand.join(pfp, "fp", "left_anti").drop("fp").unionByName(
-            sure_new
-        )
-    return hashed.join(pfp, "fp", "left_anti").drop("fp")
+    return (
+        new_stream.withColumn("fp", hash60(F.col("text")))
+        .join(pfp, "fp", "left_anti")
+        .drop("fp")
+    )
 
 
 def append_to_prior_index(
@@ -351,20 +202,13 @@ def append_to_prior_index(
     Insert order is bands first, fp LAST: fp is the increment's own
     anti-join guard, so committing it last means a crash anywhere
     mid-append leaves the fp rows absent and the retry redoes the whole
-    dump, with the bands anti-join absorbing whatever landed.
-
-    ``{prefix}_bloom`` is dropped BEFORE the first insert, not rebuilt
-    after the last: a Bloom that outlived a failed append would miss
-    fps already committed to ``{prefix}_fp``, and a ``use_bloom``
-    probe would wave their re-crawls past the exact join.  The next
-    ``use_bloom`` probe rebuilds it from the full fp table, sized to
-    the grown key count, and appends under the default probe never
-    pay for it."""
+    dump, with the bands anti-join absorbing whatever landed.  The
+    index has no derived state beyond these two tables, so nothing
+    else must be invalidated or rebuilt when an append lands."""
     from ..queries.text import N_BANDS, N_HASHES, _minhash_profile
-    from ..sources.connectors import insert_into, preclean_managed_table
+    from ..sources.connectors import insert_into
     from .text import hash60
 
-    preclean_managed_table(spark, f"{prefix}_bloom")
     fp_inc = (
         accepted_docs.select(hash60(F.col("text")).alias("fp"))
         .distinct()

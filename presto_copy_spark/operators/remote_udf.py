@@ -35,19 +35,54 @@ def remote_project(
     in_cols: list[str],
     out_schema: str,
     batch_rows: int = 1024,
+    max_inflight: int = 4,
 ) -> DataFrame:
     """Apply a remote function to ``in_cols``, returning ``out_schema``
     rows (the remote service sees {"function", "columns", "rows"} and
-    answers {"rows": [...]}, one output row per input row)."""
+    answers {"rows": [...]}, one output row per input row).
 
+    Each partition is cut into ``batch_rows``-row chunks, and up to
+    ``max_inflight`` chunk requests are in flight at once, results
+    yielded in submit order.  This is the RemoteProjectOperator
+    posture: the reference operator is ASYNC — it returns
+    ``processingPage`` futures and keeps accepting input pages while
+    earlier pages are out at the function server
+    (presto-main/.../operator/project/RemoteProjectOperator.java,
+    isBlocked()/getOutput()) — so a slow function server is hidden
+    behind pipelining rather than stalling the operator per page.  Here
+    a sliding window of ``max_inflight`` thread-pool futures per
+    partition gives the same overlap: the window fills, then each new
+    submit first drains (and yields) the HEAD future, preserving row
+    order exactly; ``max_inflight=1`` is the sequential operator.
+    Network I/O releases the GIL, so threads suffice; parallelism
+    ACROSS partitions is ordinary Spark task parallelism, and bytes
+    move executor<->endpoint only."""
+    if max_inflight < 1:
+        raise ValueError("max_inflight must be >= 1")
     out_cols = _schema_cols(out_schema)
 
     def call(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        for pdf in batches:
-            for lo in range(0, len(pdf), batch_rows):
-                yield _post_chunk(
-                    endpoint, function, in_cols, out_cols, pdf.iloc[lo : lo + batch_rows]
-                )
+        from collections import deque
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=max_inflight) as pool:
+            window: deque = deque()
+            for pdf in batches:
+                for lo in range(0, len(pdf), batch_rows):
+                    if len(window) >= max_inflight:
+                        yield window.popleft().result()
+                    window.append(
+                        pool.submit(
+                            _post_chunk,
+                            endpoint,
+                            function,
+                            in_cols,
+                            out_cols,
+                            pdf.iloc[lo : lo + batch_rows],
+                        )
+                    )
+            while window:
+                yield window.popleft().result()
 
     return df.mapInPandas(call, schema=out_schema)
 
@@ -60,8 +95,8 @@ def _post_chunk(
     chunk,  # pd.DataFrame
 ):
     """POST one record batch, return the response as a pd.DataFrame.
-    Shared by the sequential and pipelined operators — thread-safe
-    (touches only its arguments; urllib opens a fresh connection)."""
+    Thread-safe: it touches only its arguments, and urllib opens a
+    fresh connection per call."""
     import urllib.error
     import urllib.request
 
@@ -93,60 +128,6 @@ def _post_chunk(
             f" rows for {len(chunk)} inputs"
         )
     return pd.DataFrame(rows, columns=out_cols)
-
-
-def remote_project_pipelined(
-    df: DataFrame,
-    endpoint: str,
-    function: str,
-    in_cols: list[str],
-    out_schema: str,
-    batch_rows: int = 1024,
-    max_inflight: int = 4,
-) -> DataFrame:
-    """``remote_project`` with up to ``max_inflight`` batch requests in
-    flight concurrently per partition, results yielded in submit order.
-
-    This is the full RemoteProjectOperator posture: the reference
-    operator is ASYNC — it returns ``processingPage`` futures and keeps
-    accepting input pages while earlier pages are out at the function
-    server (presto-main/.../operator/project/RemoteProjectOperator.java,
-    isBlocked()/getOutput()) — so a slow function server is hidden
-    behind pipelining rather than stalling the operator per page.  Here
-    a sliding window of ``max_inflight`` thread-pool futures per
-    partition gives the same overlap: the window fills, then each new
-    submit first drains (and yields) the HEAD future, preserving row
-    order exactly.  Network I/O releases the GIL, so threads suffice;
-    parallelism ACROSS partitions is unchanged ordinary Spark task
-    parallelism, and bytes still move executor<->endpoint only."""
-    if max_inflight < 1:
-        raise ValueError("max_inflight must be >= 1")
-    out_cols = _schema_cols(out_schema)
-
-    def call(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        from collections import deque
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_inflight) as pool:
-            window: deque = deque()
-            for pdf in batches:
-                for lo in range(0, len(pdf), batch_rows):
-                    if len(window) >= max_inflight:
-                        yield window.popleft().result()
-                    window.append(
-                        pool.submit(
-                            _post_chunk,
-                            endpoint,
-                            function,
-                            in_cols,
-                            out_cols,
-                            pdf.iloc[lo : lo + batch_rows],
-                        )
-                    )
-            while window:
-                yield window.popleft().result()
-
-    return df.mapInPandas(call, schema=out_schema)
 
 
 def _schema_cols(schema: str) -> list[str]:

@@ -150,7 +150,7 @@ def create_bucketed_table(
     """
     preclean_managed_table(spark, name)
     w = (
-        df.repartition(n_buckets, *bucket_cols)
+        df.repartition(n_buckets, *_quoted(bucket_cols))
         .write.format(fmt)
         .mode("overwrite")
         .bucketBy(n_buckets, *bucket_cols)
@@ -158,6 +158,12 @@ def create_bucketed_table(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(name)
+
+
+def _quoted(cols: list[str]) -> list[str]:
+    """Backtick-quote column names so ``repartition`` reads each as one
+    column, even when it holds a dot, a space or a backtick."""
+    return ["`" + c.replace("`", "``") + "`" for c in cols]
 
 
 def _bucket_spec(spark: SparkSession, name: str) -> tuple[int, list[str]] | None:
@@ -188,7 +194,7 @@ def insert_into(name: str, df: DataFrame) -> None:
     spec = _bucket_spec(df.sparkSession, name)
     if spec is not None:
         n_buckets, cols = spec
-        df = df.repartition(n_buckets, *cols)
+        df = df.repartition(n_buckets, *_quoted(cols))
     df.write.insertInto(name, overwrite=False)
 
 

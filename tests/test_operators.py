@@ -766,8 +766,8 @@ def test_remote_project_against_loopback_function_server(spark):
 def test_remote_project_pipelined_overlaps_inflight_batches(spark):
     """RemoteProjectOperator is ASYNC — it keeps multiple pages in
     flight at the function server (RemoteProjectOperator.java
-    isBlocked()/processingPage futures).  remote_project_pipelined
-    reproduces that: with a slow endpoint (25 ms/request) and a
+    isBlocked()/processingPage futures).  remote_project reproduces
+    that: with a slow endpoint (25 ms/request) and a
     sliding window of 4, the loopback server must OBSERVE overlapping
     requests (max concurrent >= 2), and results still come back
     row-for-row correct and in order."""
@@ -776,7 +776,7 @@ def test_remote_project_pipelined_overlaps_inflight_batches(spark):
     import time
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-    from presto_copy_spark.operators.remote_udf import remote_project_pipelined
+    from presto_copy_spark.operators.remote_udf import remote_project
 
     lock = threading.Lock()
     gauge = {"now": 0, "max": 0, "requests": 0}
@@ -814,7 +814,7 @@ def test_remote_project_pipelined_overlaps_inflight_batches(spark):
         df = spark.createDataFrame(
             [(i,) for i in range(64)], "v long"
         ).coalesce(1)
-        out = remote_project_pipelined(
+        out = remote_project(
             df,
             f"http://127.0.0.1:{port}/",
             "triple",
@@ -834,7 +834,7 @@ def test_remote_project_pipelined_overlaps_inflight_batches(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        remote_project_pipelined(
+        remote_project(
             spark.createDataFrame([(1,)], "v long"),
             "http://127.0.0.1:9/",
             "f",

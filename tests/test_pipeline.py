@@ -471,17 +471,6 @@ def test_persisted_prior_index_matches_inline_and_saves_exchanges(spark, sf_dir)
             )
         )
         assert got == want and len(got) == 3, (got, want)
-        # the bloom-split probe (non-default; BASELINE.md §r14 A/B)
-        # must label identically — no false negatives by construction
-        got_bloom = sorted(
-            map(
-                tuple,
-                dedup_against_prior(
-                    spark, newc, "t_prior_idx", use_bloom=True
-                ).collect(),
-            )
-        )
-        assert got_bloom == want
 
         plan = plan_string(out, "simple")
         assert "SelectedBucketsCount" in plan, plan[:1500]
@@ -504,10 +493,8 @@ def test_persisted_prior_index_matches_inline_and_saves_exchanges(spark, sf_dir)
         for t in (
             "t_prior_idx_fp",
             "t_prior_idx_bands",
-            "t_prior_idx_bloom",
             "t_prior_flat_fp",
             "t_prior_flat_bands",
-            "t_prior_flat_bloom",
         ):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -551,20 +538,8 @@ def test_stream_dedup_against_prior_index(spark, sf_dir, tmp_path):
         assert got == want and got
         # the planted exact re-crawls are all gone from the stream output
         assert not [i for i in got if _INC_EXACT_OFF <= i < _INC_EXACT_OFF * 4 // 3]
-        # bloom-split streaming form (non-default): identical kept set
-        stream2 = (
-            spark.readStream.schema(schema).format("parquet").load(dump)
-        )
-        out2 = run_stream_to_batch(
-            stream_dedup_against_prior(
-                stream2, spark, "t_sd_idx", use_bloom=True
-            ),
-            mode="append",
-        )
-        got2 = sorted(r["doc_id"] for r in out2.select("doc_id").collect())
-        assert got2 == want
     finally:
-        for t in ("t_sd_idx_fp", "t_sd_idx_bands", "t_sd_idx_bloom"):
+        for t in ("t_sd_idx_fp", "t_sd_idx_bands"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -666,37 +641,6 @@ def test_quality_classifier_invariants(spark, sf_dir):
     assert rows[base + 5]["z"] == src_z and rows[base + 5]["predicted"] == 1
 
 
-def test_fp_bloom_no_false_negatives_and_bounded_fpp(spark):
-    """The built-from-builtins Bloom filter (operators/incremental.py,
-    round 14): every inserted fingerprint must test positive (a false
-    negative would silently re-admit a known duplicate), and the
-    false-positive rate on fresh keys must sit near its design point
-    (~0.5% at 16 bits/key, k=3) — generously bounded at 2% here."""
-    from presto_copy_spark.operators.incremental import (
-        _bloom_m_bits,
-        bloom_might_contain,
-        build_fp_bloom,
-    )
-
-    n = 5000
-    keys = spark.range(0, n).select((F.col("id") * 2654435761).alias("fp"))
-    m = _bloom_m_bits(n)
-    bl = build_fp_bloom(keys, m)
-    misses = (
-        keys.crossJoin(F.broadcast(bl))
-        .filter(~bloom_might_contain(F.col("fp"), F.col("bits"), m))
-        .count()
-    )
-    assert misses == 0
-    fresh = spark.range(100_000, 150_000).select(F.col("id").alias("fp"))
-    fp_hits = (
-        fresh.crossJoin(F.broadcast(bl))
-        .filter(bloom_might_contain(F.col("fp"), F.col("bits"), m))
-        .count()
-    )
-    assert fp_hits / 50_000 < 0.02, fp_hits
-
-
 def test_quality_gate_stream_matches_batch(spark, sf_dir, tmp_path):
     """qc_gate_stream (round 14): gating a document STREAM with frozen
     weights under Trigger.AvailableNow must keep exactly the doc_ids
@@ -728,20 +672,9 @@ def test_quality_gate_stream_matches_batch(spark, sf_dir, tmp_path):
     assert got == want and got
 
 
-def test_append_to_prior_index_matches_fresh_rebuild(spark, sf_dir):
-    """append_to_prior_index (round 14): folding an accepted dump into
-    the persisted index must label a later dump EXACTLY like an index
-    rebuilt fresh over both generations — exact re-crawls of generation
-    1 AND generation 2 both drop — and the appended table must still be
-    probed in place (the insertInto routed the increment through the
-    catalog's bucket spec)."""
-    from presto_copy_spark.operators.incremental import (
-        append_to_prior_index,
-        dedup_against_prior,
-        persist_prior_index,
-    )
-    from presto_copy_spark.plans.inspect import plan_string
-
+def _two_generations(spark, sf_dir):
+    """(g1, g2, probe): two disjoint corpus generations and a later
+    dump carrying fresh docs plus verbatim re-crawls of both."""
     from presto_copy_spark.catalog import load_table
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -761,6 +694,24 @@ def test_append_to_prior_index_matches_fresh_rebuild(spark, sf_dir):
             )
         )
     )
+    return g1, g2, probe
+
+
+def test_append_to_prior_index_matches_fresh_rebuild(spark, sf_dir):
+    """append_to_prior_index (round 14): folding an accepted dump into
+    the persisted index must label a later dump EXACTLY like an index
+    rebuilt fresh over both generations — exact re-crawls of generation
+    1 AND generation 2 both drop — and the appended table must still be
+    probed in place (the insertInto routed the increment through the
+    catalog's bucket spec)."""
+    from presto_copy_spark.operators.incremental import (
+        append_to_prior_index,
+        dedup_against_prior,
+        persist_prior_index,
+    )
+    from presto_copy_spark.plans.inspect import plan_string
+
+    g1, g2, probe = _two_generations(spark, sf_dir)
     try:
         persist_prior_index(spark, g1, "t_app_idx", n_buckets=4)
         append_to_prior_index(spark, g2, "t_app_idx")
@@ -807,37 +758,10 @@ def test_append_to_prior_index_matches_fresh_rebuild(spark, sf_dir):
         for t in (
             "t_app_idx_fp",
             "t_app_idx_bands",
-            "t_app_idx_bloom",
             "t_app_fresh_fp",
             "t_app_fresh_bands",
-            "t_app_fresh_bloom",
         ):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def _two_generations(spark, sf_dir):
-    """(g1, g2, probe): two disjoint corpus generations and a later
-    dump carrying fresh docs plus verbatim re-crawls of both."""
-    from presto_copy_spark.catalog import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    g1 = d.filter(F.col("doc_id") % 3 == 0)
-    g2 = d.filter(F.col("doc_id") % 3 == 1)
-    off = 10_000_000
-    probe = (
-        d.filter(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            g1.filter(F.col("doc_id") % 21 == 0).select(
-                (F.col("doc_id") + off).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            g2.filter(F.col("doc_id") % 22 == 1).select(
-                (F.col("doc_id") + 2 * off).alias("doc_id"), "text"
-            )
-        )
-    )
-    return g1, g2, probe
 
 
 def test_prior_index_writes_one_file_per_bucket(spark, sf_dir):
@@ -872,17 +796,20 @@ def test_prior_index_writes_one_file_per_bucket(spark, sf_dir):
         plan = plan_string(dedup_against_prior(spark, probe, "t_opb_idx"), "simple")
         assert "SelectedBucketsCount" in plan
     finally:
-        for t in ("t_opb_idx_fp", "t_opb_idx_bands", "t_opb_idx_bloom"):
+        for t in ("t_opb_idx_fp", "t_opb_idx_bands"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_append_drops_bloom_before_writing(spark, sf_dir, tmp_path, monkeypatch):
-    """A Bloom that outlives a failed append misses fps the fp table may
-    already hold, and a use_bloom probe would then wave re-crawls past
-    the exact join.  The append drops ``{prefix}_bloom`` before its
-    first insert, and a use_bloom probe rebuilds it on first use, so
-    Bloom-split probes — batch and streaming — label like a fresh
-    rebuild after an append."""
+def test_append_retry_after_failed_fp_insert_matches_fresh_rebuild(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An append that crashes after its bands insert but before its fp
+    insert (the fp table is written last) must leave an index that a
+    plain retry brings to exactly the fresh two-generation rebuild: the
+    batch probe labels like the rebuild, the failed attempt's band rows
+    are absorbed rather than duplicated, and the stream probe keeps
+    exactly the rebuild's exact-stage survivors, with every
+    generation-2 re-crawl dropped."""
     import pytest
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -897,8 +824,8 @@ def test_append_drops_bloom_before_writing(spark, sf_dir, tmp_path, monkeypatch)
 
     g1, g2, probe = _two_generations(spark, sf_dir)
 
-    def labels(prefix, **kw):
-        out = dedup_against_prior(spark, probe, prefix, **kw)
+    def labels(prefix):
+        out = dedup_against_prior(spark, probe, prefix)
         return sorted(map(tuple, out.collect()))
 
     real_insert = DataFrameWriter.insertInto
@@ -909,39 +836,33 @@ def test_append_drops_bloom_before_writing(spark, sf_dir, tmp_path, monkeypatch)
         return real_insert(self, tableName, overwrite)
 
     try:
-        persist_prior_index(spark, g1, "t_blm_idx", n_buckets=4)
-        # the first use_bloom probe builds the Bloom over g1's fps
-        assert labels("t_blm_idx", use_bloom=True) == labels("t_blm_idx")
-        assert spark.catalog.tableExists("t_blm_idx_bloom")
-
+        persist_prior_index(spark, g1, "t_rty_idx", n_buckets=4)
         with monkeypatch.context() as m:
             m.setattr(DataFrameWriter, "insertInto", failing_fp_insert)
             with pytest.raises(RuntimeError, match="injected fp insert failure"):
-                append_to_prior_index(spark, g2, "t_blm_idx")
-        assert not spark.catalog.tableExists("t_blm_idx_bloom")
+                append_to_prior_index(spark, g2, "t_rty_idx")
 
-        append_to_prior_index(spark, g2, "t_blm_idx")  # the retry
-        assert not spark.catalog.tableExists("t_blm_idx_bloom")
-        persist_prior_index(spark, g1.unionByName(g2), "t_blm_fresh", n_buckets=4)
-        want = labels("t_blm_fresh")
-        assert labels("t_blm_idx", use_bloom=True) == want
-        assert spark.catalog.tableExists("t_blm_idx_bloom")
+        append_to_prior_index(spark, g2, "t_rty_idx")  # the retry
+        persist_prior_index(spark, g1.unionByName(g2), "t_rty_fresh", n_buckets=4)
+        assert labels("t_rty_idx") == labels("t_rty_fresh")
+        # the failed attempt's band rows were absorbed, not duplicated
+        assert (
+            spark.table("t_rty_idx_bands").count()
+            == spark.table("t_rty_fresh_bands").count()
+        )
 
-        # the streaming Bloom split keeps exactly what the fresh
-        # rebuild's exact stage keeps
-        spark.sql("DROP TABLE t_blm_idx_bloom")
         dump = str(tmp_path / "dump")
         probe.write.parquet(dump)
         schema = spark.read.parquet(dump).schema
         stream = spark.readStream.schema(schema).format("parquet").load(dump)
         out = run_stream_to_batch(
-            stream_dedup_against_prior(stream, spark, "t_blm_idx", use_bloom=True),
+            stream_dedup_against_prior(stream, spark, "t_rty_idx"),
             mode="append",
         )
         got = sorted(r["doc_id"] for r in out.select("doc_id").collect())
         kept = (
             probe.withColumn("fp", hash60(F.col("text")))
-            .join(spark.table("t_blm_fresh_fp"), "fp", "left_anti")
+            .join(spark.table("t_rty_fresh_fp"), "fp", "left_anti")
             .select("doc_id")
             .collect()
         )
@@ -949,12 +870,10 @@ def test_append_drops_bloom_before_writing(spark, sf_dir, tmp_path, monkeypatch)
         assert not [i for i in got if i >= 20_000_000]  # g2 re-crawls dropped
     finally:
         for t in (
-            "t_blm_idx_fp",
-            "t_blm_idx_bands",
-            "t_blm_idx_bloom",
-            "t_blm_fresh_fp",
-            "t_blm_fresh_bands",
-            "t_blm_fresh_bloom",
+            "t_rty_idx_fp",
+            "t_rty_idx_bands",
+            "t_rty_fresh_fp",
+            "t_rty_fresh_bands",
         ):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 

@@ -473,3 +473,51 @@ def test_saveastable_survives_orphan_warehouse_dir(spark):
         for name in ("t_orphan_plain", "t_orphan_bucketed"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+
+
+def test_insert_into_follows_the_table_bucket_spec(spark):
+    """insert_into reads a bucketed table's spec (``_bucket_spec``, from
+    DESCRIBE TABLE EXTENDED) and exchanges the append on it: an append
+    from 8 write tasks lands as at most one file per bucket, and the
+    table still self-joins on both bucket columns with no Exchange —
+    including when a bucket column's name holds a dot and backticks, so
+    it must be quoted.  Into an unbucketed table the rows land as
+    given."""
+    from presto_copy_spark.plans.inspect import plan_string
+    from presto_copy_spark.sources.connectors import (
+        create_bucketed_table,
+        create_table_as,
+        insert_into,
+    )
+
+    odd = "grp.`key`"
+    quoted = "`grp.``key```"
+    rows = spark.range(0, 40).selectExpr(
+        "id AS k", f"CAST(id % 5 AS string) AS {quoted}", "id * 2 AS v"
+    )
+    more = rows.selectExpr("k + 100 AS k", quoted, "v").repartition(8)
+    try:
+        create_bucketed_table(spark, "t_ins_bucketed", rows, ["k", odd], 4)
+        before = set(spark.table("t_ins_bucketed").inputFiles())
+        insert_into("t_ins_bucketed", more)
+        t = spark.table("t_ins_bucketed")
+        assert len(set(t.inputFiles()) - before) <= 4
+        assert t.count() == 80
+        a, b = t.alias("a"), t.alias("b")
+        self_join = a.hint("merge").join(
+            b,
+            (F.col("a.k") == F.col("b.k"))
+            & (F.col(f"a.{quoted}") == F.col(f"b.{quoted}")),
+        )
+        plan = plan_string(self_join, "simple")
+        assert "SelectedBucketsCount" in plan and "Exchange" not in plan, plan
+        assert self_join.count() == 80
+
+        create_table_as(spark, "t_ins_plain", rows)
+        insert_into("t_ins_plain", more)
+        assert sorted(map(tuple, spark.table("t_ins_plain").collect())) == sorted(
+            map(tuple, rows.unionByName(more).collect())
+        )
+    finally:
+        for name in ("t_ins_bucketed", "t_ins_plain"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
