@@ -17,6 +17,10 @@ a docstring:
                        profile, bucketed + sorted on ``band_key``
                        (band index folded into the key so the probe is
                        a single-column equi-join on the bucket column).
+  The bucket count is fixed when the index is created, as Presto
+  fixes it at table creation; by default it is the creating session's
+  ``defaultParallelism``, so every bucketed stage of a probe or an
+  append is one full wave over the cores.
 - ``dedup_against_prior`` labels a new snapshot against the persisted
   index with the same exact-then-near pipeline as the inline operator
   (bit-identical output, proven in tests/test_pipeline.py).  Both
@@ -31,7 +35,10 @@ a docstring:
   writer through an exchange on the table's bucket function
   (``sources.connectors``), so it lands as at most one file per
   bucket and the index holds O(buckets x generations) files, however
-  parallel the writing plan.
+  parallel the writing plan.  Its anti-join guards merge-join each
+  increment against its table the same way the probe does, so an
+  append reads the index in place and exchanges only the increment,
+  once per table.
 - ``stream_dedup_against_prior`` is the streaming form of the exact
   stage: a stream-static left-anti join against ``{prefix}_fp``.
 
@@ -53,7 +60,6 @@ __all__ = [
     "stream_dedup_against_prior",
 ]
 
-N_BUCKETS = 32
 
 def _band_key_col(prof: DataFrame, n_hashes: int, n_bands: int) -> DataFrame:
     """Explode a minhash profile into (doc_id, n, sh_set, band_key)
@@ -78,18 +84,35 @@ def persist_prior_index(
     spark: SparkSession,
     prior_docs: DataFrame,
     prefix: str,
-    n_buckets: int = N_BUCKETS,
+    n_buckets: int | None = None,
 ) -> None:
     """Build the frozen corpus's dedup index once per generation:
     ``{prefix}_fp`` and ``{prefix}_bands``, each written as at most one
-    file per bucket."""
+    file per bucket.
+
+    ``n_buckets`` defaults to the creating session's
+    ``defaultParallelism``.  The bucket count is every later probe's
+    and append's task count on the prior side, so one bucket per core
+    makes each bucketed stage one full wave: fewer buckets idle cores,
+    more buckets run the stage in several waves and write more files
+    per append.  Appends follow the count fixed here (the table's own
+    spec), so an index built on one host keeps its layout elsewhere.
+
+    A null ``text`` hashes to a null fp, which can never match a probe
+    (``fp == pfp``), so the fp table holds no null."""
     # lazy imports: the profile/fingerprint definitions live with the
     # inline operator so the two paths can never drift apart
     from ..queries.text import N_BANDS, N_HASHES, _minhash_profile
     from ..sources.connectors import create_bucketed_table
     from .text import hash60
 
-    fp = prior_docs.select(hash60(F.col("text")).alias("fp")).distinct()
+    if n_buckets is None:
+        n_buckets = spark.sparkContext.defaultParallelism
+    fp = (
+        prior_docs.select(hash60(F.col("text")).alias("fp"))
+        .filter(F.col("fp").isNotNull())
+        .distinct()
+    )
     create_bucketed_table(spark, f"{prefix}_fp", fp, ["fp"], n_buckets, ["fp"])
     bands = _band_key_col(
         _minhash_profile(spark, prior_docs), N_HASHES, N_BANDS
@@ -199,6 +222,20 @@ def append_to_prior_index(
     fresh-rebuild state instead of double-inserting band rows (output
     would survive thanks to the probe's distinct(), but probe cost
     would silently inflate).
+
+    Each guard is a ``merge`` anti-join on the table's bucket column,
+    so the index is read in place (bucketed scan, no exchange, no
+    broadcast) and only the increment is exchanged, once, onto the
+    table's bucket function.  The fp increment's ``distinct()`` runs
+    after the anti-join on that same exchange, and ``insert_into``'s
+    repartition is then a no-op.  The bands guard joins on
+    ``band_key`` alone and checks ``doc_id`` as a residual condition:
+    a second equi-key would make Spark
+    (``spark.sql.requireAllClusterKeysForCoPartition``) shuffle the
+    whole bands table.  Null fps are dropped, as in the persist: null
+    never matches in the anti-join, so a null would otherwise re-enter
+    the table on every append and every retry.
+
     Insert order is bands first, fp LAST: fp is the increment's own
     anti-join guard, so committing it last means a crash anywhere
     mid-append leaves the fp rows absent and the retry redoes the whole
@@ -211,19 +248,22 @@ def append_to_prior_index(
 
     fp_inc = (
         accepted_docs.select(hash60(F.col("text")).alias("fp"))
+        .filter(F.col("fp").isNotNull())
+        .join(spark.table(f"{prefix}_fp").hint("merge"), "fp", "left_anti")
         .distinct()
-        .join(spark.table(f"{prefix}_fp"), "fp", "left_anti")
     )
-    bands_inc = (
-        _band_key_col(_minhash_profile(spark, accepted_docs), N_HASHES, N_BANDS)
-        .join(
-            spark.table(f"{prefix}_bands").select("doc_id", "band_key"),
-            ["doc_id", "band_key"],
-            "left_anti",
-        )
-        # insertInto matches by POSITION; the multi-key join hoists the
-        # join columns first, so restore the table's column order
-        .select("doc_id", "n", "sh_set", "band_key")
+    bn = _band_key_col(
+        _minhash_profile(spark, accepted_docs), N_HASHES, N_BANDS
+    ).alias("bn")
+    bp = spark.table(f"{prefix}_bands").select("doc_id", "band_key").alias("bp")
+    # doc_id equality as xor == 0: null on either side never matches
+    # (as with ==), it cannot overflow under ANSI mode, and it reads
+    # both sides, so Spark keeps it out of the equi-keys
+    same_doc = F.col("bn.doc_id").bitwiseXOR(F.col("bp.doc_id")) == 0
+    bands_inc = bn.join(
+        bp.hint("merge"),
+        (F.col("bn.band_key") == F.col("bp.band_key")) & same_doc,
+        "left_anti",
     )
     insert_into(f"{prefix}_bands", bands_inc)
     insert_into(f"{prefix}_fp", fp_inc)

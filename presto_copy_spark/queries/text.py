@@ -89,9 +89,14 @@ def _shingle_index(docs: DataFrame) -> DataFrame:
     partitioning would put all shingle work on one task.  At 100 TB the
     same applies — size partitions by post-explode rows, not scan bytes
     (or lower spark.sql.files.maxPartitionBytes for document tables).
+
+    The exchange hashes on ``doc_id`` rather than round-robin, at the
+    same partition count: explode keeps that partitioning, so a
+    per-document aggregation over the index (``_minhash_profile``'s
+    ``groupBy("doc_id")``) needs no second exchange.
     """
     par = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.repartition(par).select(
+    return docs.repartition(par, "doc_id").select(
         "doc_id", F.explode(shingles(tokens(F.col("text")))).alias("shingle")
     )
 

@@ -878,6 +878,135 @@ def test_append_retry_after_failed_fp_insert_matches_fresh_rebuild(
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+
+def test_append_keeps_null_text_out_of_the_fp_table(spark):
+    """A null text hashes to a null fp, which never matches in the
+    append's left-anti guard; unfiltered, each append and each retry
+    would insert it again.  A null fp can never match a probe either,
+    so the index holds none: the append-grown index, appended twice,
+    equals a fresh rebuild over both generations."""
+    from presto_copy_spark.operators.incremental import (
+        append_to_prior_index,
+        persist_prior_index,
+    )
+
+    def index_rows(prefix):
+        return [
+            sorted(map(tuple, spark.table(f"{prefix}_{t}").collect()), key=repr)
+            for t in ("fp", "bands")
+        ]
+
+    schema = "doc_id long, text string"
+    g1 = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, None)], schema
+    )
+    g2 = spark.createDataFrame(
+        [(3, "epsilon zeta eta theta"), (4, None)], schema
+    )
+    try:
+        persist_prior_index(spark, g1, "t_nul_idx", n_buckets=4)
+        append_to_prior_index(spark, g2, "t_nul_idx")
+        append_to_prior_index(spark, g2, "t_nul_idx")
+        persist_prior_index(
+            spark, g1.unionByName(g2), "t_nul_fresh", n_buckets=4
+        )
+        grown = index_rows("t_nul_idx")
+        assert grown == index_rows("t_nul_fresh")
+        assert len(grown[0]) == 2 and (None,) not in grown[0], grown[0]
+    finally:
+        for t in ("t_nul_idx_fp", "t_nul_idx_bands", "t_nul_fresh_fp", "t_nul_fresh_bands"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_append_guards_read_the_index_in_place(spark, sf_dir, monkeypatch):
+    """The append's anti-join guards merge-join each increment against
+    its bucketed table: no broadcast, each index scan bucketed and fed
+    to its join with no exchange between, and the fp increment's
+    distinct() and the write's bucket repartition riding the one
+    exchange of the increment onto the bucket function."""
+    from presto_copy_spark.operators.incremental import (
+        append_to_prior_index,
+        persist_prior_index,
+    )
+    from presto_copy_spark.plans.inspect import _jvm_children, plan_string
+    from presto_copy_spark.sources import connectors
+
+    g1, g2, _ = _two_generations(spark, sf_dir)
+    handed = {}
+    real_insert_into = connectors.insert_into
+
+    def capturing_insert_into(name, df):
+        handed[name] = df
+        real_insert_into(name, df)
+
+    def merge_joins(df):
+        stack, out = [df._jdf.queryExecution().executedPlan()], []
+        while stack:
+            node = stack.pop()
+            if node.nodeName() == "SortMergeJoin":
+                out.append(node)
+            stack.extend(_jvm_children(node))
+        return out
+
+    try:
+        persist_prior_index(spark, g1, "t_gip_idx", n_buckets=4)
+        monkeypatch.setattr(connectors, "insert_into", capturing_insert_into)
+        append_to_prior_index(spark, g2, "t_gip_idx")
+        assert set(handed) == {"t_gip_idx_fp", "t_gip_idx_bands"}
+        for name, df in handed.items():
+            plan = plan_string(df, "simple")
+            assert "BroadcastExchange" not in plan, (name, plan)
+            (join,) = merge_joins(df)
+            index_side = join.right().treeString()
+            assert f"{name}[" in index_side, (name, index_side)
+            assert "Bucketed: true" in index_side, (name, index_side)
+            assert "Exchange" not in index_side, (name, index_side)
+        fp_inc = handed["t_gip_idx_fp"]
+        assert plan_string(fp_inc, "simple").count("Exchange") == 1
+        assert plan_string(fp_inc.repartition(4, "fp"), "simple").count("Exchange") == 1
+    finally:
+        for t in ("t_gip_idx_fp", "t_gip_idx_bands"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_prior_index_edge_inputs(spark, sf_dir):
+    """Edge inputs of the persisted index: built without n_buckets it
+    takes one bucket per core of the session (defaultParallelism);
+    appending an empty dump writes no data file and leaves both tables'
+    rows as they were; probing an empty dump returns no rows."""
+    from presto_copy_spark.operators.incremental import (
+        append_to_prior_index,
+        dedup_against_prior,
+        persist_prior_index,
+    )
+
+    g1, _, _ = _two_generations(spark, sf_dir)
+    empty = g1.limit(0)
+    tables = ("t_edge_idx_fp", "t_edge_idx_bands")
+    try:
+        persist_prior_index(spark, g1, "t_edge_idx")
+        for t in tables:
+            spec = {
+                r["col_name"]: r["data_type"]
+                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
+            }
+            assert int(spec["Num Buckets"]) == spark.sparkContext.defaultParallelism
+
+        def files_and_rows():
+            return [
+                (sorted(spark.table(t).inputFiles()), spark.table(t).count())
+                for t in tables
+            ]
+
+        before = files_and_rows()
+        append_to_prior_index(spark, empty, "t_edge_idx")
+        assert files_and_rows() == before
+        assert dedup_against_prior(spark, empty, "t_edge_idx").collect() == []
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_quality_classifier_null_text_scores_on_bias(spark):
     """A NULL text must not null the feature vector (concat(NULL, bias)
     trap): both engines score such a doc on the bias pseudo-counts
